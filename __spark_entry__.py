@@ -44,26 +44,11 @@ def _fan(df: DataFrame) -> DataFrame:
     One round-robin exchange of the raw rows fixes it — the same
     repartition-before-sign move plans/pipeline.py has always made.
 
-    Size-gated so it disappears at scale: inputs large enough to carry
-    >= parallelism splits (estimated plan size > parallelism ×
-    maxPartitionBytes) already scan wide, and re-shuffling a 100 TB
-    corpus to "fan it out" would be pure waste — those return unchanged.
+    Unconditional: a byte-size gate cannot tell a wide scan from a
+    single-row-group one, and no measured workload shows skipping the
+    exchange helps.
     """
-    spark = df.sparkSession
-    dp = spark.sparkContext.defaultParallelism
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes().toString()
-        )
-        max_pb = int(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-            .lower().replace("m", "000000").replace("g", "000000000")
-        )
-    except Exception:  # stats unavailable → assume small (bench tables)
-        size, max_pb = 0, 1
-    if size > dp * max_pb:
-        return df
-    return df.repartition(dp)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 # --------------------------------------------------------------------------

@@ -100,6 +100,16 @@ def test_stop_after_and_resume(spark, tiny_turns, tmp_path):
     assert full["ledger"].is_committed("cluster")
 
 
+def test_stop_after_rejects_stages_the_config_does_not_run(spark, tiny_turns, tmp_path):
+    """A misspelt stage, a sub-commit, or a disabled channel's stage would
+    never be reached — it must fail before any work, not run everything."""
+    wd = str(tmp_path / "bad")
+    for stage in ("verfy", "prefix_corpus", "containment"):
+        with pytest.raises(ValueError, match="not a stage this config runs"):
+            run_pipeline(spark, tiny_turns, wd, CFG, stop_after=stage)
+    assert not os.path.exists(wd)
+
+
 def test_gc_reclaims_and_resume_skips(spark, tiny_turns, tmp_path):
     wd = str(tmp_path / "gc")
     out1 = run_pipeline(spark, tiny_turns, wd, CFG, gc=True)

@@ -38,6 +38,15 @@ def test_cc_long_path_converges(spark, small_thresh):
     assert len(got) == n
 
 
+def test_cc_iteration_cap_raises(spark):
+    # a 33-node path cannot converge in one distributed round: the cap
+    # must fail loudly instead of returning unconverged labels
+    nodes = [f"n{i:03d}" for i in range(33)]
+    edges = _edges(spark, list(zip(nodes[:-1], nodes[1:])))
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edges, small_graph_edges=0, max_iter=1)
+
+
 def test_cluster_assignments_singletons(spark):
     all_ids = spark.createDataFrame(pd.DataFrame({"conv_id": ["a", "b", "c", "z"]}))
     edges = _edges(spark, [("a", "b")])

@@ -11,7 +11,7 @@ buckets already proven small; oversize rows flow straight to star edges.
 import pytest
 from pyspark.sql import functions as F
 
-from wdedup_spark.operators.lsh import candidate_pairs
+from wdedup_spark.operators.lsh import candidate_pairs, candidate_pairs_multi
 
 
 def _banded(spark, rows):
@@ -42,12 +42,19 @@ def test_star_policy_truncates_hot_bucket(spark, skewed):
     assert got == star | small
 
 
-def test_oversize_branch_builds_no_array(spark, skewed):
+def _multi(banded, **kw):
+    """The multi-channel entry point over one constant channel."""
+    return candidate_pairs_multi(banded.withColumn("ch", F.lit(0).cast("tinyint")), **kw)
+
+
+@pytest.mark.parametrize("expand", [candidate_pairs, _multi], ids=["single", "multi"])
+def test_oversize_branch_builds_no_array(spark, skewed, expand):
     """Plan-level guarantee: bucket sizes come from a window count (spills,
     no buffer) and NO per-bucket array is ever built — the r6 expansion is
     a size-gated self-join, so collect_list is gone entirely and the join
-    inputs are filtered on the window-computed size."""
-    pairs = candidate_pairs(skewed, max_bucket=16, oversize_policy="star")
+    inputs are filtered on the window-computed size.  Pinned on both
+    entry points of the shared bucket core."""
+    pairs = expand(skewed, max_bucket=16, oversize_policy="star")
     optimized = pairs._jdf.queryExecution().optimizedPlan().toString().lower()
     assert "windowspecdefinition" in optimized, "size gate must be a window count"
     # the r5 shape collected each small bucket into an array; the r6

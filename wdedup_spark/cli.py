@@ -19,8 +19,7 @@ import argparse
 import json
 import sys
 
-STAGES = ["assemble", "exact", "prefix", "sign", "candidates", "verify",
-          "containment", "cluster"]
+from wdedup_spark.plans.pipeline import STAGES
 
 
 def _add_pipeline_args(d: argparse.ArgumentParser) -> None:

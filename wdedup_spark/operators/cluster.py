@@ -125,7 +125,8 @@ def connected_components(
     same way, src/main.cpp:213-214): count edges first — below
     ``small_graph_edges`` run exact union-find on the driver (one job +
     O(E α(E)) local work); above it, distributed hash-to-min with pointer
-    jumping (O(log n) rounds)."""
+    jumping (O(log n) rounds).  Raises ``RuntimeError`` if labels are
+    still changing after ``max_iter`` rounds."""
     # eager local checkpoint BEFORE the strategy probe (r6, guide §2.4):
     # the count() below and the collect()/iteration that follows are
     # SEPARATE actions — without the checkpoint the entire upstream chain
@@ -157,7 +158,7 @@ def connected_components(
     )
     labels, prev_handle = _truncate_lineage(labels, eager=False)
 
-    rounds = 0
+    rounds, changed = 0, 1  # nothing has propagated yet
     for _ in range(max_iter):
         rounds += 1
         # (1) propagate: min label over closed neighborhood
@@ -206,6 +207,13 @@ def connected_components(
         prev_handle.unpersist()
     if sym_handle is not None:
         sym_handle.unpersist()
+    if changed:
+        # labels still moving: returning them would silently split
+        # components, so the cap is a hard failure, never a result
+        raise RuntimeError(
+            f"connected_components did not converge in {rounds} rounds "
+            f"(max_iter={max_iter}); labels were still changing"
+        )
     LAST_RUN_INFO.update(strategy="pointer-jumping", rounds=rounds, n_edges=n_edges)
     return labels.select(F.col("node").alias("conv_id"), F.col("label").alias("cluster_id"))
 

@@ -74,6 +74,116 @@ def band_buckets(
     )
 
 
+def _bucket_pairs(
+    banded: DataFrame,
+    keys: list[str],
+    max_bucket: int,
+    oversize_policy: str,
+    new_col: str | None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """The one bucket-expansion core behind ``candidate_pairs`` and
+    ``candidate_pairs_multi``: ``banded`` rows keyed by ``keys`` (a bucket
+    is one distinct key tuple — ``["band", "bucket"]``, or with a leading
+    channel tag ``[ch, "band", "bucket"]``) → ``(within, star)``.
+
+    ``within``: one raw ``(*tag, a, b)`` row (a < b) per within-bucket
+    collision over buckets with 1 < m <= max_bucket (every bucket under
+    ``"all"``); ``tag`` is ``keys`` minus band/bucket, carried through.
+    ``star``: ``(*tag, a, b)`` edges of oversize buckets under ``"star"``,
+    else None.
+
+    Skew safety: bucket sizes are established FIRST (window count over the
+    key exchange — sort-based, spills, never an array), so only buckets
+    already proven ``m <= max_bucket`` reach the self-join.  A 10^7-member
+    boilerplate flood therefore never materializes a per-bucket buffer:
+    its rows flow straight to the star branch as (anchor, id) edges, one
+    row at a time.
+    """
+    tag = keys[:-2]
+
+    # within-bucket expansion as a co-partitioned SELF-JOIN on the bucket
+    # key (r6): the previous shape (collect_list per bucket + double
+    # explode + filter) paid an ObjectHashAggregate building an array per
+    # bucket and an interpreted two-level explode — measured 2.4× slower
+    # end-to-end than the join at 1.6M banded rows.  A bucket of m rows
+    # streams m(m-1)/2 join rows; no per-bucket array is ever built.
+    def _expand(rows: DataFrame) -> DataFrame:
+        lcols = [*[F.col(k) for k in keys], F.col("id").alias("_ida")]
+        rcols = [*[F.col(k) for k in keys], F.col("id").alias("_idb")]
+        if new_col:
+            lcols.append(F.col(new_col).alias("_na"))
+            rcols.append(F.col(new_col).alias("_nb"))
+        # shuffle_hash hint: size ESTIMATES through the Python signature
+        # UDFs are garbage, so without it the planner broadcasts the
+        # multi-million-row banded side (driver collect + the whole
+        # sign/band subtree executed twice — observed in the cosine
+        # query's executedPlan).  A shuffled-hash join partitions both
+        # sides on the bucket key once — and since both sides are the
+        # SAME subtree, the second Exchange is a ReusedExchange: the
+        # upstream computes exactly once.
+        p = (
+            rows.select(*lcols)
+            .hint("shuffle_hash")
+            .join(rows.select(*rcols), keys)
+            .filter(F.col("_ida") < F.col("_idb"))
+        )
+        if new_col:
+            p = p.filter(F.col("_na") | F.col("_nb"))
+        return p.select(*tag, F.col("_ida").alias("a"), F.col("_idb").alias("b"))
+
+    if oversize_policy == "all":
+        # no cap → no size gate needed: singleton buckets emit nothing
+        # from the a < b join (tests/small data)
+        return _expand(banded), None
+
+    w = Window.partitionBy(*keys)
+    extra_cols = []
+    if new_col:
+        # incremental star anchor: the min over OLD members — the node
+        # the base run's star edges already orbit.  A new bucket-min
+        # would otherwise be isolated (old members' committed edges
+        # point at the OLD min, and new members only edge to the
+        # anchor).  All-new flood → fall back to min over new.
+        extra_cols = [
+            new_col,
+            F.coalesce(
+                F.min(F.when(~F.col(new_col), F.col("id"))).over(w),
+                F.min(F.when(F.col(new_col), F.col("id"))).over(w),
+            ).alias("anchor"),
+        ]
+    counted = banded.select(
+        *keys,
+        "id",
+        *extra_cols,
+        F.count(F.lit(1)).over(w).alias("m"),
+        F.min("id").over(w).alias("min_id"),
+    ).filter(F.col("m") > 1)
+    # the join reuses the window's hash partitioning on the bucket key —
+    # one exchange total
+    within = _expand(counted.filter(F.col("m") <= max_bucket))
+    if oversize_policy != "star":
+        return within, None
+
+    # star edges row-by-row: (anchor, member) — no array ever built.
+    # Incremental: only NEW members need edges (old members were
+    # star-connected to the old-member min by the base run at the same
+    # config), anchored at that same old min.
+    big_rows = counted.filter(F.col("m") > max_bucket)
+    if new_col:
+        star = big_rows.filter(
+            F.col(new_col) & (F.col("id") != F.col("anchor"))
+        ).select(
+            *tag,
+            F.least("anchor", "id").alias("a"),
+            F.greatest("anchor", "id").alias("b"),
+        )
+    else:
+        star = big_rows.filter(F.col("id") != F.col("min_id")).select(
+            *tag, F.col("min_id").alias("a"), F.col("id").alias("b")
+        )
+    return within, star
+
+
 def candidate_pairs(
     banded: DataFrame,
     max_bucket: int = DEFAULT_MAX_BUCKET,
@@ -112,113 +222,19 @@ def candidate_pairs(
     requiring 2 of b bands suppresses noise ~quadratically while recall
     at the dedup threshold stays ~1 (s=0.8, b=32, r=4 → P[≥2] ≈
     0.999998).  Star edges (structural connectivity) bypass the floor.
-
-    Skew safety: bucket sizes are established FIRST (window count over the
-    band/bucket exchange — sort-based, spills, never an array), so
-    ``collect_list`` only ever runs on buckets already proven
-    ``m <= max_bucket``.  A 10^7-member boilerplate flood therefore never
-    materializes a 10^7-element aggregation buffer: its rows flow straight
-    to the star branch as (min_id, id) edges, one row at a time.
     """
-    # within-bucket expansion as a co-partitioned SELF-JOIN on the bucket
-    # key (r6): the previous shape (collect_list per bucket + double
-    # explode + filter) paid an ObjectHashAggregate building an array per
-    # bucket and an interpreted two-level explode — measured 2.4× slower
-    # end-to-end than the join at 1.6M banded rows.  The join's two
-    # inputs are the SAME subtree, so Catalyst reuses one Exchange
-    # (ReusedExchange — no second shuffle), and no per-bucket array is
-    # ever materialized: a bucket of m rows streams m(m-1)/2 join rows.
-    # Output bounds are unchanged — the sized policies still gate on the
-    # window count FIRST, so only buckets with 1 < m <= max_bucket reach
-    # the join; oversize buckets take the star path row-by-row.
-    def _expand(rows: DataFrame) -> DataFrame:
-        lcols = [F.col("band"), F.col("bucket"), F.col("id").alias("_ida")]
-        rcols = [F.col("band"), F.col("bucket"), F.col("id").alias("_idb")]
-        if new_col:
-            lcols.append(F.col(new_col).alias("_na"))
-            rcols.append(F.col(new_col).alias("_nb"))
-        # shuffle_hash hint: size ESTIMATES through the Python signature
-        # UDFs are garbage, so without it the planner broadcasts the
-        # multi-million-row banded side (driver collect + the whole
-        # sign/band subtree executed twice — observed in the cosine
-        # query's executedPlan).  A shuffled-hash join partitions both
-        # sides on the bucket key once — and since both sides are the
-        # SAME subtree, the second Exchange is a ReusedExchange: the
-        # upstream computes exactly once.
-        p = (
-            rows.select(*lcols)
-            .hint("shuffle_hash")
-            .join(rows.select(*rcols), ["band", "bucket"])
-            .filter(F.col("_ida") < F.col("_idb"))
-        )
-        if new_col:
-            p = p.filter(F.col("_na") | F.col("_nb"))
-        return p.select(F.col("_ida").alias("a"), F.col("_idb").alias("b"))
-
-    if oversize_policy == "all":
-        # no cap → no size gate needed: singleton buckets emit nothing
-        # from the a < b join (tests/small data)
-        pairs_small = _expand(banded)
-        big_rows = None
-    else:
-        w = Window.partitionBy("band", "bucket")
-        extra_cols = []
-        if new_col:
-            # incremental star anchor: the min over OLD members — the node
-            # the base run's star edges already orbit.  A new bucket-min
-            # would otherwise be isolated (old members' committed edges
-            # point at the OLD min, and new members only edge to the
-            # anchor).  All-new flood → fall back to min over new.
-            extra_cols = [
-                new_col,
-                F.coalesce(
-                    F.min(F.when(~F.col(new_col), F.col("id"))).over(w),
-                    F.min(F.when(F.col(new_col), F.col("id"))).over(w),
-                ).alias("anchor"),
-            ]
-        counted = banded.select(
-            "band",
-            "bucket",
-            "id",
-            *extra_cols,
-            F.count(F.lit(1)).over(w).alias("m"),
-            F.min("id").over(w).alias("min_id"),
-        ).filter(F.col("m") > 1)
-        # the join below reuses the window's hash partitioning on
-        # (band, bucket) — one exchange total
-        small = counted.filter(F.col("m") <= max_bucket)
-        pairs_small = _expand(small)
-        big_rows = counted.filter(F.col("m") > max_bucket)
-
+    pairs, star = _bucket_pairs(
+        banded, ["band", "bucket"], max_bucket, oversize_policy, new_col
+    )
     if min_collisions > 1:
-        pairs_small = (
-            pairs_small.groupBy("a", "b")
+        pairs = (
+            pairs.groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("_hits"))
             .filter(F.col("_hits") >= min_collisions)
             .select("a", "b")
         )
-
-    if oversize_policy == "star" and big_rows is not None:
-        # star edges row-by-row: (anchor, member) — no array ever built.
-        # Incremental: only NEW members need edges (old members were
-        # star-connected to the old-member min by the base run at the
-        # same config), anchored at that same old min.
-        if new_col:
-            pairs_big = (
-                big_rows.filter(F.col(new_col) & (F.col("id") != F.col("anchor")))
-                .select(
-                    F.least("anchor", "id").alias("a"),
-                    F.greatest("anchor", "id").alias("b"),
-                )
-            )
-        else:
-            pairs_big = big_rows.filter(F.col("id") != F.col("min_id")).select(
-                F.col("min_id").alias("a"), F.col("id").alias("b")
-            )
-        pairs = pairs_small.unionByName(pairs_big)
-    else:
-        pairs = pairs_small
-
+    if star is not None:
+        pairs = pairs.unionByName(star)
     if dedup:
         pairs = pairs.distinct()
     return pairs.select(F.col("a").alias("conv_a"), F.col("b").alias("conv_b"))
@@ -233,8 +249,8 @@ def candidate_pairs_multi(
 ) -> DataFrame:
     """Multi-channel ``candidate_pairs`` (r6): ``banded`` carries a
     channel tag (``channel_col``, a narrow integer — guide §2.3) and the
-    bucket machinery is keyed per (channel, band, bucket), so every
-    channel behaves EXACTLY like its own ``candidate_pairs`` call — same
+    bucket core is keyed per (channel, band, bucket), so every channel
+    behaves EXACTLY like its own ``candidate_pairs`` call — same
     per-bucket size gate, same star economy, same incremental anchor —
     but all channels share ONE window exchange and ONE self-join instead
     of one of each per channel (the pipeline's candidate stage ran three).
@@ -248,80 +264,13 @@ def candidate_pairs_multi(
     than aggregating per (channel, a, b) first.  Bounds are unchanged:
     the window size gate still runs before the join, so the raw stream
     carries at most Σ m·(m−1)/2 rows over gated buckets plus star edges.
-
-    KEEP IN SYNC with ``candidate_pairs`` above: the window gate, the
-    ``_expand`` self-join (shuffle_hash rationale), and the star/anchor
-    logic are deliberately the same machinery with a channel key column
-    added — a fix to either copy (e.g. the incremental anchor coalesce)
-    almost certainly applies to both.  ``candidate_pairs`` stays
-    separate because its single-channel callers (simhash_candidates,
-    minhash_lsh_candidates, the cosine operators) have plan-pinned
-    shapes a constant channel column would perturb for zero gain.
     """
-    keys = [channel_col, "band", "bucket"]
-
-    def _expand(rows: DataFrame) -> DataFrame:
-        lcols = [*[F.col(k) for k in keys], F.col("id").alias("_ida")]
-        rcols = [*[F.col(k) for k in keys], F.col("id").alias("_idb")]
-        if new_col:
-            lcols.append(F.col(new_col).alias("_na"))
-            rcols.append(F.col(new_col).alias("_nb"))
-        # same shuffle_hash rationale as candidate_pairs: size estimates
-        # through the Python signature UDFs are garbage; both sides are
-        # the SAME subtree, so the second exchange is a ReusedExchange
-        p = (
-            rows.select(*lcols)
-            .hint("shuffle_hash")
-            .join(rows.select(*rcols), keys)
-            .filter(F.col("_ida") < F.col("_idb"))
-        )
-        if new_col:
-            p = p.filter(F.col("_na") | F.col("_nb"))
-        return p.select(channel_col, F.col("_ida").alias("a"), F.col("_idb").alias("b"))
-
-    if oversize_policy == "all":
-        pairs_small = _expand(banded)
-        big_rows = None
-    else:
-        w = Window.partitionBy(*keys)
-        extra_cols = []
-        if new_col:
-            extra_cols = [
-                new_col,
-                F.coalesce(
-                    F.min(F.when(~F.col(new_col), F.col("id"))).over(w),
-                    F.min(F.when(F.col(new_col), F.col("id"))).over(w),
-                ).alias("anchor"),
-            ]
-        counted = banded.select(
-            *keys,
-            "id",
-            *extra_cols,
-            F.count(F.lit(1)).over(w).alias("m"),
-            F.min("id").over(w).alias("min_id"),
-        ).filter(F.col("m") > 1)
-        small = counted.filter(F.col("m") <= max_bucket)
-        pairs_small = _expand(small)
-        big_rows = counted.filter(F.col("m") > max_bucket)
-
-    pairs = pairs_small.withColumn("is_star", F.lit(False))
-
-    if oversize_policy == "star" and big_rows is not None:
-        if new_col:
-            pairs_big = (
-                big_rows.filter(F.col(new_col) & (F.col("id") != F.col("anchor")))
-                .select(
-                    channel_col,
-                    F.least("anchor", "id").alias("a"),
-                    F.greatest("anchor", "id").alias("b"),
-                )
-            )
-        else:
-            pairs_big = big_rows.filter(F.col("id") != F.col("min_id")).select(
-                channel_col, F.col("min_id").alias("a"), F.col("id").alias("b")
-            )
-        pairs = pairs.unionByName(pairs_big.withColumn("is_star", F.lit(True)))
-
+    pairs, star = _bucket_pairs(
+        banded, [channel_col, "band", "bucket"], max_bucket, oversize_policy, new_col
+    )
+    pairs = pairs.withColumn("is_star", F.lit(False))
+    if star is not None:
+        pairs = pairs.unionByName(star.withColumn("is_star", F.lit(True)))
     return pairs.select(
         channel_col, F.col("a").alias("conv_a"), F.col("b").alias("conv_b"), "is_star"
     )

@@ -30,6 +30,7 @@ import hashlib
 import json
 import posixpath
 from dataclasses import asdict, dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -336,6 +337,154 @@ def build_verify(
     )
 
 
+#: the stages ``stop_after`` can name, in run order.  ``prefix`` (with
+#: its ``prefix_corpus``/``prefix_bounds`` sub-commits) and
+#: ``containment`` run only when their channel is enabled.
+STAGES = ("assemble", "exact", "prefix", "sign", "candidates", "verify",
+          "containment", "cluster")
+#: the returned dict's key for each stage's committed output
+_OUT_KEYS = dict(zip(STAGES, ("conv", "exact", "prefix_edges", "signed", "candidates",
+                              "verified", "containment_pairs", "clusters")))
+
+
+class _StopAfter(Exception):
+    """Raised by the stage runner once the ``stop_after`` stage commits."""
+
+
+class _StageRunner:
+    """The stage graph's one runner, shared by ``run_pipeline`` and
+    ``run_incremental``: every stage commits through ``StageLedger.run``
+    / ``run_ranged`` here, its output lands under the returned dict's key,
+    and the run ends once the ``stop_after`` stage commits — the body runs
+    under ``with runner:``, which absorbs that early exit.
+
+    ``stop_after`` must name a stage this config runs: any other name
+    would never match and silently run the whole pipeline."""
+
+    def __init__(self, spark: SparkSession, workdir: str, cfg: PipelineConfig,
+                 stop_after: str | None) -> None:
+        enabled = [
+            s for s in STAGES
+            if (s != "prefix" or cfg.enable_prefix)
+            and (s != "containment" or cfg.enable_containment)
+        ]
+        if stop_after is not None and stop_after not in enabled:
+            raise ValueError(
+                f"stop_after={stop_after!r} is not a stage this config runs: {enabled}"
+            )
+        self.spark, self.stop_after = spark, stop_after
+        self.ledger = StageLedger(workdir, config_fence=cfg.fence(), spark=spark)
+        self.out: dict = {"ledger": self.ledger}
+
+    def __call__(self, stage: str, fn, **kw) -> DataFrame:
+        return self._record(stage, self.ledger.run(self.spark, stage, fn, **kw))
+
+    def ranged(self, stage: str, input_fn, transform, **kw) -> DataFrame:
+        return self._record(
+            stage, self.ledger.run_ranged(self.spark, stage, input_fn, transform, **kw)
+        )
+
+    def _record(self, stage: str, df: DataFrame) -> DataFrame:
+        if stage in _OUT_KEYS:
+            self.out[_OUT_KEYS[stage]] = df
+        # stopping after the last stage is a full run (its gc included)
+        if stage == self.stop_after and stage != STAGES[-1]:
+            raise _StopAfter
+        return df
+
+    def __enter__(self) -> "_StageRunner":
+        return self
+
+    def __exit__(self, exc_type, *_exc) -> bool:
+        return exc_type is _StopAfter
+
+
+def _fp_groups(conv: DataFrame) -> DataFrame:
+    """(fp, rep_id, doc, n_members) per content fingerprint.  No
+    collect_list of members: a boilerplate flood (10^8 identical docs)
+    must not materialize one giant array in a single aggregation buffer.
+    Member→rep star edges are derived by re-joining on the digest — a
+    plain shuffle join whose skew AQE splits."""
+    return conv.groupBy("fp").agg(
+        F.min("conv_id").alias("rep_id"),
+        F.min("doc").alias("doc"),  # all docs in an fp-group are identical
+        F.count(F.lit(1)).alias("n_members"),
+    )
+
+
+def _sign(df: DataFrame, cfg: PipelineConfig, par: int) -> DataFrame:
+    """(conv_id, doc) → the committed sign table (doc dropped).  CPU-bound
+    Python stage: fan out to ``par`` partitions regardless of input file
+    byte-splits."""
+    return add_signatures(
+        df.repartition(par), "doc",
+        k=cfg.k, n_perms=cfg.n_perms, seed=cfg.seed,
+        enable_simhash=cfg.enable_simhash,
+        enable_substring=cfg.enable_substring,
+        substring_k=cfg.substring_k, substring_w=cfg.substring_w,
+    ).drop("doc")
+
+
+def _near_dup_tail(
+    run: _StageRunner,
+    cfg: PipelineConfig,
+    signed: DataFrame,
+    docs: DataFrame,
+    edges: list[DataFrame],
+    new_col: str | None,
+    cluster_fn,
+) -> None:
+    """candidates → verify → containment → cluster, shared by both
+    pipelines.  ``signed`` is the sign table candidates band over (in
+    incremental mode flagged by ``new_col``, so only pairs touching the
+    new batch are expanded); ``docs`` supplies (conv_id, doc) for the
+    doc-level verify channels; ``edges`` are the upstream edge lists
+    (exact, then prefix) the cluster stage unions after the verified
+    pairs; ``cluster_fn(edges)`` commits the final assignment."""
+    # -- candidates (the shuffle stages) --------------------------------------
+    cands = run("candidates", lambda: build_candidates(signed, cfg, new_col=new_col))
+
+    # -- verify (exact Jaccard; substring pairs get exact LCS) ---------------
+    # JVM-side MinHash-estimate pre-filter: lane-agreement rate is an
+    # unbiased Jaccard estimate; pairs far below threshold die inside
+    # whole-stage codegen before any Python verification.  ONE join per
+    # pair side carries BOTH the signature (estimate) and the shingle set
+    # (exact Jaccard) — see build_verify.
+    verified = run(
+        "verify",
+        lambda: build_verify(cands, signed.drop(new_col) if new_col else signed, docs, cfg),
+    )
+    edges = [verified, *edges]
+
+    # -- containment channel (optional) ---------------------------------------
+    # prefix-filtered set-containment join over the committed shingle
+    # sets (operators/containment.py): quote-in-transcript pairs whose
+    # Jaccard is ~|A|/|B| and therefore invisible to every band config.
+    # Consumes the sign stage's shingles — no re-tokenization.  In
+    # incremental mode only new-touching candidates are expanded over a
+    # same-day token order of old ∪ new (lossless for any single
+    # consistent order); old×old pairs were emitted by previous days.
+    if cfg.enable_containment:
+        from wdedup_spark.operators.containment import containment_join
+
+        edges.append(run(
+            "containment",
+            lambda: containment_join(
+                signed, threshold=cfg.containment_threshold,
+                shingle_col="shingles", new_col=new_col,
+            ),
+            # recorded so chain validation in run_incremental can check the
+            # threshold each day ACTUALLY committed at (ADVICE r4: base
+            # ledgers open with config_fence="", so the fence never sees it)
+            extra={"containment_threshold": cfg.containment_threshold},
+        ))
+
+    # -- cluster ---------------------------------------------------------------
+    run("cluster", lambda: cluster_fn(
+        reduce(DataFrame.unionByName, [e.select("conv_a", "conv_b") for e in edges])
+    ))
+
+
 def run_pipeline(
     spark: SparkSession,
     turns: DataFrame,
@@ -347,216 +496,107 @@ def run_pipeline(
     """Run (or resume) the full dedup pipeline; returns the named stage
     outputs, all backed by committed parquet.
 
-    ``stop_after`` commits stages up to the named one then returns (the
-    reference's --wprof-only/--wmerge-only debug staging,
-    /root/reference/src/wcli.cpp:115-125).  ``gc`` reclaims intermediate
-    outputs (sign, candidates) once the final stage commits (O14,
-    src/wmerge.cpp:141-144); resumed runs then skip straight to the
-    surviving outputs."""
-    if stop_after == "prefix" and not cfg.enable_prefix:
-        # without the guard this debug invocation would silently run the
-        # ENTIRE pipeline (no done() check ever matches)
-        raise ValueError("stop_after='prefix' requires enable_prefix=True")
-    if stop_after == "containment" and not cfg.enable_containment:
-        raise ValueError("stop_after='containment' requires enable_containment=True")
-    ledger = StageLedger(workdir, config_fence=cfg.fence(), spark=spark)
-    out: dict = {"ledger": ledger}
-
-    def done(stage: str) -> bool:
-        return stop_after == stage
-
-    # -- stage 1: assemble (one shuffle on conv_id) ---------------------------
-    # the content fingerprint is computed HERE, in the same pass, and
-    # committed with the conversations: both the exact stage and the
-    # cluster stage's exact edges read it back for free instead of each
-    # re-hashing the whole corpus (the round-2 "members" stage existed
-    # only to cache that second sha2 pass — now unnecessary)
-    conv = ledger.run(
-        spark, "assemble", lambda: add_fingerprint(assemble_conversations(turns), "doc")
-    )
-    out["conv"] = conv
-    if done("assemble"):
-        return out
-
-    # effective sign-stage commit granularity: data-proportional, from the
-    # committed assemble row count (free — it's in the ledger entry)
-    n_convs = ledger.metrics().get("assemble", {}).get("rows", 0)
-    eff_ranges = max(1, min(cfg.sync_ranges, n_convs // cfg.sync_min_rows_per_range))
-
-    # -- stage 2: exact dedup (shuffle on 32-byte digest) ---------------------
-    # No collect_list of members: a boilerplate flood (10^8 identical docs)
-    # must not materialize one giant array in a single aggregation buffer.
-    # Member→rep star edges are derived by re-joining on the digest — a
-    # plain shuffle join whose skew AQE splits.
-    def _exact() -> DataFrame:
-        return conv.groupBy("fp").agg(
-            F.min("conv_id").alias("rep_id"),
-            F.min("doc").alias("doc"),  # all docs in an fp-group are identical
-            F.count(F.lit(1)).alias("n_members"),
+    ``stop_after`` (one of ``STAGES`` that ``cfg`` enables) commits stages
+    up to the named one then returns (the reference's
+    --wprof-only/--wmerge-only debug staging, src/wcli.cpp:115-125).
+    ``gc`` reclaims intermediate outputs (sign, candidates) once the final
+    stage commits (O14, src/wmerge.cpp:141-144); resumed runs then skip
+    straight to the surviving outputs."""
+    run = _StageRunner(spark, workdir, cfg, stop_after)
+    ledger = run.ledger
+    with run:
+        # -- stage 1: assemble (one shuffle on conv_id) -----------------------
+        # the content fingerprint is computed HERE, in the same pass, and
+        # committed with the conversations: both the exact stage and the
+        # cluster stage's exact edges read it back for free instead of each
+        # re-hashing the whole corpus
+        conv = run(
+            "assemble", lambda: add_fingerprint(assemble_conversations(turns), "doc")
         )
 
-    # written range-partitioned on rep_id (when granular commits are in
-    # play) so the sign stage's ranged commits partition-prune straight
-    # off this output — no staging copy.  At eff_ranges == 1 the range
-    # layout buys nothing; skip it and its partitionBy write.
-    if eff_ranges > 1:
-        exact = ledger.run(
-            spark, "exact", _exact, range_key="rep_id", n_ranges=eff_ranges
+        # effective sign-stage commit granularity: data-proportional, from
+        # the committed assemble row count (free — it's in the ledger entry)
+        n_convs = ledger.metrics().get("assemble", {}).get("rows", 0)
+        eff_ranges = max(1, min(cfg.sync_ranges, n_convs // cfg.sync_min_rows_per_range))
+
+        # -- stage 2: exact dedup (shuffle on 32-byte digest) -----------------
+        # written range-partitioned on rep_id (when granular commits are in
+        # play) so the sign stage's ranged commits partition-prune straight
+        # off this output — no staging copy.  At eff_ranges == 1 the range
+        # layout buys nothing; skip it and its partitionBy write.
+        layout = {"range_key": "rep_id", "n_ranges": eff_ranges} if eff_ranges > 1 else {}
+        exact = run("exact", lambda: _fp_groups(conv), **layout)
+        # exact edges are a pure id/fp join of two COMMITTED outputs (fp
+        # rides along from the assemble stage — nothing re-fingerprints)
+        exact_edges = (
+            conv.select("fp", F.col("conv_id").alias("conv_b"))
+            .join(exact.filter(F.col("n_members") > 1).select("fp", F.col("rep_id").alias("conv_a")), "fp")
+            .filter(F.col("conv_a") != F.col("conv_b"))
+            .select("conv_a", "conv_b")
         )
-    else:
-        exact = ledger.run(spark, "exact", _exact)
-    out["exact"] = exact
-    if done("exact"):
-        return out
-    # exact edges are a pure id/fp join of two COMMITTED outputs (fp rides
-    # along from the assemble stage — nothing re-fingerprints the corpus)
-    exact_edges = (
-        conv.select("fp", F.col("conv_id").alias("conv_b"))
-        .join(exact.filter(F.col("n_members") > 1).select("fp", F.col("rep_id").alias("conv_a")), "fp")
-        .filter(F.col("conv_a") != F.col("conv_b"))
-        .select("conv_a", "conv_b")
-    )
-    # near-dup stages see one representative per distinct document
-    reps = exact.select(F.col("rep_id").alias("conv_id"), "doc")
+        # near-dup stages see one representative per distinct document
+        reps = exact.select(F.col("rep_id").alias("conv_id"), "doc")
+        edges = [exact_edges]
 
-    # -- stage 2b (optional): prefix-subsumption edges over the reps ----------
-    # runs on DISTINCT documents (exact-first means no equal-text runs),
-    # one range exchange + O(partitions) driver stitch; commits
-    # (conv_a=witness, conv_b=prefix) edges for the cluster union
-    prefix_edge_df = None
-    if cfg.enable_prefix:
-        from wdedup_spark.operators.prefixdedup import (
-            corpus_bounds,
-            edges_from_sorted,
-            sorted_corpus,
-        )
-
-        # three commits, not one: the SORTED corpus (one range exchange)
-        # and its per-slice bounds are durable artifacts — parquet is the
-        # pin the in-memory operator gets from localCheckpoint — so later
-        # run_incremental days probe the pinned slices instead of
-        # re-sorting the corpus (see prefixdedup.py committed-artifact
-        # notes).  Cost: one extra text copy on storage, the same
-        # materialize-once economy the operator already paid transiently;
-        # gc=True reclaims it when no increment chain will follow.
-        prefix_corpus = ledger.run(
-            spark, "prefix_corpus", lambda: sorted_corpus(reps, "doc", "conv_id")
-        )
-        prefix_bounds = ledger.run(
-            spark, "prefix_bounds", lambda: corpus_bounds(prefix_corpus)
-        )
-        prefix_edge_df = ledger.run(
-            spark, "prefix", lambda: edges_from_sorted(prefix_corpus, prefix_bounds)
-        )
-        out["prefix_edges"] = prefix_edge_df
-        if done("prefix"):
-            return out
-
-    # -- stage 3: sign (narrow, ONE fused vectorized pandas UDF) --------------
-    # The single most expensive Python stage, so it commits per key-range
-    # (run_ranged = the reference's --sync-distance analog): a crash mid-
-    # sign resumes from the first uncommitted range instead of re-signing
-    # the whole corpus.
-    def _sign_range(part: DataFrame, _r: int) -> DataFrame:
-        # CPU-bound Python stage: fan out to ~2 partitions per core
-        # regardless of input file byte-splits (ranges run up to 4 jobs
-        # concurrently, so size each range for its share of the cores)
-        par = max(1, spark.sparkContext.defaultParallelism * 2 // min(eff_ranges, 4))
-        df = add_signatures(
-            part.repartition(par), "doc",
-            k=cfg.k, n_perms=cfg.n_perms, seed=cfg.seed,
-            enable_simhash=cfg.enable_simhash,
-            enable_substring=cfg.enable_substring,
-            substring_k=cfg.substring_k, substring_w=cfg.substring_w,
-        )
-        return df.drop("doc")
-
-    if eff_ranges > 1:
-        signed = ledger.run_ranged(
-            spark, "sign", lambda: reps, _sign_range, key_col="conv_id",
-            n_ranges=eff_ranges, input_stage="exact",
-            input_select=lambda df: df.select(
-                F.col("rep_id").alias("conv_id"), "doc"
-            ),
-        )
-    else:
-        # one range == one whole-stage commit: plain run, none of the
-        # fence/staging/per-bucket machinery (toy-scale fast path; the
-        # recompute it would insure against is smaller than its overhead)
-        signed = ledger.run(spark, "sign", lambda: _sign_range(reps, 0))
-    out["signed"] = signed
-    if done("sign"):
-        return out
-
-    # -- stage 4: candidates (the shuffle stages) ------------------------------
-    cands = ledger.run(spark, "candidates", lambda: build_candidates(signed, cfg))
-    out["candidates"] = cands
-    if done("candidates"):
-        return out
-
-    # -- stage 5: verify (exact Jaccard; substring pairs get exact LCS) -------
-    # JVM-side MinHash-estimate pre-filter: lane-agreement rate is an
-    # unbiased Jaccard estimate; pairs far below threshold die inside
-    # whole-stage codegen before any Python verification.  ONE join per
-    # pair side carries BOTH the signature (estimate) and the shingle set
-    # (exact Jaccard) — see build_verify.
-    verified = ledger.run(spark, "verify", lambda: build_verify(cands, signed, reps, cfg))
-    out["verified"] = verified
-    if done("verify"):
-        return out
-
-    # -- stage 5b (optional): containment channel -----------------------------
-    # prefix-filtered set-containment join over the committed shingle
-    # sets (operators/containment.py): quote-in-transcript pairs whose
-    # Jaccard is ~|A|/|B| and therefore invisible to every band config.
-    # Consumes the sign stage's shingles — no re-tokenization.
-    containment_edge_df = None
-    if cfg.enable_containment:
-        from wdedup_spark.operators.containment import containment_join
-
-        containment_edge_df = ledger.run(
-            spark,
-            "containment",
-            lambda: containment_join(
-                signed, threshold=cfg.containment_threshold, shingle_col="shingles"
-            ),
-            # recorded so chain validation in run_incremental can check the
-            # threshold this day ACTUALLY committed at (ADVICE r4: base
-            # ledgers open with config_fence="", so the fence never sees it)
-            extra={"containment_threshold": cfg.containment_threshold},
-        )
-        out["containment_pairs"] = containment_edge_df
-        if done("containment"):
-            return out
-
-    # -- stage 6: cluster (iterative hash-to-min CC) ---------------------------
-    def _cluster() -> DataFrame:
-        edges = verified.select("conv_a", "conv_b").unionByName(
-            exact_edges.select("conv_a", "conv_b")
-        )
-        if prefix_edge_df is not None:
-            edges = edges.unionByName(prefix_edge_df.select("conv_a", "conv_b"))
-        if containment_edge_df is not None:
-            edges = edges.unionByName(
-                containment_edge_df.select("conv_a", "conv_b")
-            )
-        return cluster_assignments(conv.select("conv_id"), edges)
-
-    clusters = ledger.run(spark, "cluster", _cluster)
-    out["clusters"] = clusters
-
-    if gc:
-        # reclaim intermediates whose consumers are all committed (O14):
-        # sign feeds candidates+verify; candidates feeds verify
-        ledger.gc("sign")
-        ledger.gc("candidates")
+        # -- stage 2b (optional): prefix-subsumption edges over the reps ------
+        # runs on DISTINCT documents (exact-first means no equal-text runs),
+        # one range exchange + O(partitions) driver stitch; commits
+        # (conv_a=witness, conv_b=prefix) edges for the cluster union
         if cfg.enable_prefix:
-            # the sorted-corpus text copy feeds only the prefix scan in
-            # THIS run — but an increment chain probes it, so (like sign)
-            # chains require gc=False; bounds are O(slices), kept
-            ledger.gc("prefix_corpus")
+            from wdedup_spark.operators.prefixdedup import (
+                corpus_bounds,
+                edges_from_sorted,
+                sorted_corpus,
+            )
 
-    return out
+            # three commits, not one: the SORTED corpus (one range exchange)
+            # and its per-slice bounds are durable artifacts — parquet is the
+            # pin the in-memory operator gets from localCheckpoint — so later
+            # run_incremental days probe the pinned slices instead of
+            # re-sorting the corpus (see prefixdedup.py committed-artifact
+            # notes).  Cost: one extra text copy on storage, the same
+            # materialize-once economy the operator already paid transiently;
+            # gc=True reclaims it when no increment chain will follow.
+            p_corpus = run("prefix_corpus", lambda: sorted_corpus(reps, "doc", "conv_id"))
+            p_bounds = run("prefix_bounds", lambda: corpus_bounds(p_corpus))
+            edges.append(run("prefix", lambda: edges_from_sorted(p_corpus, p_bounds)))
+
+        # -- stage 3: sign (narrow, ONE fused vectorized pandas UDF) ----------
+        # The single most expensive Python stage, so it commits per key-range
+        # (run_ranged = the reference's --sync-distance analog): a crash mid-
+        # sign resumes from the first uncommitted range instead of re-signing
+        # the whole corpus.  Ranges run up to 4 jobs concurrently, so each
+        # range is sized for its share of ~2 partitions per core.
+        par = max(1, spark.sparkContext.defaultParallelism * 2 // min(eff_ranges, 4))
+        if eff_ranges > 1:
+            signed = run.ranged(
+                "sign", lambda: reps, lambda part, _r: _sign(part, cfg, par),
+                key_col="conv_id", n_ranges=eff_ranges, input_stage="exact",
+                input_select=lambda df: df.select(F.col("rep_id").alias("conv_id"), "doc"),
+            )
+        else:
+            # one range == one whole-stage commit: plain run, none of the
+            # fence/staging/per-bucket machinery (toy-scale fast path; the
+            # recompute it would insure against is smaller than its overhead)
+            signed = run("sign", lambda: _sign(reps, cfg, par))
+
+        # -- stages 4-6: candidates → verify → containment → cluster ---------
+        _near_dup_tail(
+            run, cfg, signed, reps, edges, None,
+            lambda e: cluster_assignments(conv.select("conv_id"), e),
+        )
+
+        if gc:
+            # reclaim intermediates whose consumers are all committed (O14):
+            # sign feeds candidates+verify; candidates feeds verify
+            ledger.gc("sign")
+            ledger.gc("candidates")
+            if cfg.enable_prefix:
+                # the sorted-corpus text copy feeds only the prefix scan in
+                # THIS run — but an increment chain probes it, so (like sign)
+                # chains require gc=False; bounds are O(slices), kept
+                ledger.gc("prefix_corpus")
+    return run.out
 
 
 # ---------------------------------------------------------------------------
@@ -614,7 +654,8 @@ def run_incremental(
       one fp-join against the chain's exact tables;
     * candidate generation re-bands the committed sign tables JVM-side
       (narrow scan, no Python, no re-signing) and expands only pairs
-      touching the new batch (``candidate_pairs(new_col=...)``); oversize
+      touching the new batch (``build_candidates(new_col=...)`` over
+      ``lsh.candidate_pairs_multi``); oversize
       buckets emit star edges for new members anchored at the old-member
       min — old×old pairs are never regenerated;
     * verify's Python (Jaccard/edit/common-run) sees only those pairs;
@@ -649,12 +690,8 @@ def run_incremental(
     additionally merge clusters a full recompute keeps separate —
     increments cannot retract an edge that was true when emitted.
     """
-    if stop_after == "prefix" and not cfg.enable_prefix:
-        raise ValueError("stop_after='prefix' requires enable_prefix=True")
-    if stop_after == "containment" and not cfg.enable_containment:
-        raise ValueError("stop_after='containment' requires enable_containment=True")
-    ledger = StageLedger(workdir, config_fence=cfg.fence(), spark=spark)
-    out: dict = {"ledger": ledger}
+    run = _StageRunner(spark, workdir, cfg, stop_after)
+    ledger = run.ledger
 
     # record / validate the chain pointer (idempotent across resumes)
     ptr = posixpath.join(ledger.workdir, BASE_POINTER)
@@ -747,171 +784,86 @@ def run_incremental(
     old_exact = _union("exact")  # (fp, rep_id, doc, n_members); fps disjoint along the chain
     base_clusters = base_ledgers[0].output(spark, "cluster")
 
-    def done(stage: str) -> bool:
-        return stop_after == stage
-
-    # -- assemble + fingerprint the new batch only ---------------------------
-    conv = ledger.run(
-        spark, "assemble", lambda: add_fingerprint(assemble_conversations(new_turns), "doc")
-    )
-    out["conv"] = conv
-    if done("assemble"):
-        return out
-
-    # -- exact: batch-internal dedup + routing to committed reps -------------
-    # committed rows = fps the corpus has NEVER seen (chain fps stay
-    # disjoint → day-N unions need no precedence logic)
-    def _exact() -> DataFrame:
-        batch = conv.groupBy("fp").agg(
-            F.min("conv_id").alias("rep_id"),
-            F.min("doc").alias("doc"),
-            F.count(F.lit(1)).alias("n_members"),
-        )
-        return batch.join(old_exact.select("fp"), "fp", "left_anti")
-
-    exact = ledger.run(spark, "exact", _exact)
-    out["exact"] = exact
-    if done("exact"):
-        return out
-    # every new member → its rep (committed base rep for re-seen fps,
-    # batch rep for new fps); derived from committed outputs, like
-    # run_pipeline's exact_edges
-    rep_map = old_exact.select("fp", F.col("rep_id").alias("rep")).unionByName(
-        exact.select("fp", F.col("rep_id").alias("rep"))
-    )
-    exact_edges = (
-        conv.select("fp", F.col("conv_id").alias("conv_b"))
-        .join(rep_map, "fp")
-        .filter(F.col("rep") != F.col("conv_b"))
-        .select(F.col("rep").alias("conv_a"), "conv_b")
-    )
-    reps_new = exact.select(F.col("rep_id").alias("conv_id"), "doc")
-
-    # -- prefix channel (optional): probe the chain's pinned sorted runs ------
-    # No corpus re-sort: today's batch is range-sorted ALONE (its own
-    # committed run, a chain day for tomorrow), within-batch edges come
-    # from scanning that run, and cross-day edges come from predecessor/
-    # successor probes into every chain day's committed slices — touched
-    # slices only.  Soundness/completeness of two probes per new doc, and
-    # the coarser-clusters caveat (early-witness edges a full recompute
-    # re-points; subsumed SET and canonical edges identical), are argued
-    # in prefixdedup.py's committed-artifact notes and pinned by
-    # tests/test_pipeline_prefix.py.
-    prefix_edge_df = None
-    if cfg.enable_prefix:
-        from wdedup_spark.operators.prefixdedup import (
-            corpus_bounds,
-            cross_prefix_edges,
-            edges_from_sorted,
-            sorted_corpus,
+    with run:
+        # -- assemble + fingerprint the new batch only -------------------------
+        conv = run(
+            "assemble", lambda: add_fingerprint(assemble_conversations(new_turns), "doc")
         )
 
-        p_corpus = ledger.run(
-            spark, "prefix_corpus", lambda: sorted_corpus(reps_new, "doc", "conv_id")
+        # -- exact: batch-internal dedup + routing to committed reps -----------
+        # committed rows = fps the corpus has NEVER seen (chain fps stay
+        # disjoint → day-N unions need no precedence logic)
+        exact = run(
+            "exact", lambda: _fp_groups(conv).join(old_exact.select("fp"), "fp", "left_anti")
         )
-        p_bounds = ledger.run(
-            spark, "prefix_bounds", lambda: corpus_bounds(p_corpus)
+        # every new member → its rep (committed base rep for re-seen fps,
+        # batch rep for new fps); derived from committed outputs, like
+        # run_pipeline's exact_edges
+        rep_map = old_exact.select("fp", F.col("rep_id").alias("rep")).unionByName(
+            exact.select("fp", F.col("rep_id").alias("rep"))
         )
-
-        def _prefix_edges() -> DataFrame:
-            within = edges_from_sorted(p_corpus, p_bounds)
-            chain_runs = [
-                (bl.output(spark, "prefix_corpus"), bl.output(spark, "prefix_bounds"))
-                for bl in base_ledgers
-            ]
-            cross = cross_prefix_edges(reps_new, chain_runs, "doc", "conv_id")
-            return within.unionByName(cross)
-
-        prefix_edge_df = ledger.run(spark, "prefix", _prefix_edges)
-        out["prefix_edges"] = prefix_edge_df
-        if done("prefix"):
-            return out
-
-    # -- sign the new reps only ----------------------------------------------
-    def _sign() -> DataFrame:
-        par = max(1, spark.sparkContext.defaultParallelism * 2)
-        return add_signatures(
-            reps_new.repartition(par), "doc",
-            k=cfg.k, n_perms=cfg.n_perms, seed=cfg.seed,
-            enable_simhash=cfg.enable_simhash,
-            enable_substring=cfg.enable_substring,
-            substring_k=cfg.substring_k, substring_w=cfg.substring_w,
-        ).drop("doc")
-
-    signed_new = ledger.run(spark, "sign", _sign)
-    out["signed"] = signed_new
-    if done("sign"):
-        return out
-
-    signed_all = old_sign.withColumn("is_new", F.lit(False)).unionByName(
-        signed_new.withColumn("is_new", F.lit(True))
-    )
-
-    # -- candidates touching the new batch ------------------------------------
-    cands = ledger.run(
-        spark, "candidates", lambda: build_candidates(signed_all, cfg, new_col="is_new")
-    )
-    out["candidates"] = cands
-    if done("candidates"):
-        return out
-
-    # -- verify (docs for the doc-level channels come from the chain) ---------
-    reps_docs = old_exact.select(
-        F.col("rep_id").alias("conv_id"), "doc"
-    ).unionByName(reps_new)
-    verified = ledger.run(
-        spark, "verify",
-        lambda: build_verify(cands, signed_all.drop("is_new"), reps_docs, cfg),
-    )
-    out["verified"] = verified
-    if done("verify"):
-        return out
-
-    # -- containment channel (optional): pairs touching the new batch --------
-    # same-day token order over old ∪ new (lossless for any single
-    # consistent order — no frozen-frequency state), old side re-exploded
-    # JVM-side from the committed shingle arrays, only new-touching
-    # candidates expanded (containment_join new_col mode).  Old×old pairs
-    # were emitted by previous increments; like the LSH channel, this
-    # assumes the channel ran (same threshold) on every prior day.
-    containment_edge_df = None
-    if cfg.enable_containment:
-        from wdedup_spark.operators.containment import containment_join
-
-        containment_edge_df = ledger.run(
-            spark,
-            "containment",
-            lambda: containment_join(
-                signed_all, threshold=cfg.containment_threshold,
-                shingle_col="shingles", new_col="is_new",
-            ),
-            # this increment becomes a chain day for tomorrow: record the
-            # threshold so the validation above covers it too
-            extra={"containment_threshold": cfg.containment_threshold},
+        exact_edges = (
+            conv.select("fp", F.col("conv_id").alias("conv_b"))
+            .join(rep_map, "fp")
+            .filter(F.col("rep") != F.col("conv_b"))
+            .select(F.col("rep").alias("conv_a"), "conv_b")
         )
-        out["containment_pairs"] = containment_edge_df
-        if done("containment"):
-            return out
+        reps_new = exact.select(F.col("rep_id").alias("conv_id"), "doc")
+        edges = [exact_edges]
 
-    # -- cluster: merge into the committed assignment --------------------------
-    def _cluster() -> DataFrame:
-        edges = verified.select("conv_a", "conv_b").unionByName(
-            exact_edges.select("conv_a", "conv_b")
-        )
-        if prefix_edge_df is not None:
-            edges = edges.unionByName(prefix_edge_df.select("conv_a", "conv_b"))
-        if containment_edge_df is not None:
-            edges = edges.unionByName(
-                containment_edge_df.select("conv_a", "conv_b")
+        # -- prefix channel (optional): probe the chain's pinned sorted runs ----
+        # No corpus re-sort: today's batch is range-sorted ALONE (its own
+        # committed run, a chain day for tomorrow), within-batch edges come
+        # from scanning that run, and cross-day edges come from predecessor/
+        # successor probes into every chain day's committed slices — touched
+        # slices only.  Soundness/completeness of two probes per new doc, and
+        # the coarser-clusters caveat (early-witness edges a full recompute
+        # re-points; subsumed SET and canonical edges identical), are argued
+        # in prefixdedup.py's committed-artifact notes and pinned by
+        # tests/test_pipeline_prefix.py.
+        if cfg.enable_prefix:
+            from wdedup_spark.operators.prefixdedup import (
+                corpus_bounds,
+                cross_prefix_edges,
+                edges_from_sorted,
+                sorted_corpus,
             )
-        return incremental_update(base_clusters, edges, conv.select("conv_id"))
 
-    clusters = ledger.run(spark, "cluster", _cluster)
-    out["clusters"] = clusters
+            p_corpus = run("prefix_corpus", lambda: sorted_corpus(reps_new, "doc", "conv_id"))
+            p_bounds = run("prefix_bounds", lambda: corpus_bounds(p_corpus))
 
-    if gc:
-        # candidates feeds only verify; sign/exact deltas MUST survive for
-        # the next increment in the chain
-        ledger.gc("candidates")
+            def _prefix_edges() -> DataFrame:
+                within = edges_from_sorted(p_corpus, p_bounds)
+                chain_runs = [
+                    (bl.output(spark, "prefix_corpus"), bl.output(spark, "prefix_bounds"))
+                    for bl in base_ledgers
+                ]
+                cross = cross_prefix_edges(reps_new, chain_runs, "doc", "conv_id")
+                return within.unionByName(cross)
 
-    return out
+            edges.append(run("prefix", _prefix_edges))
+
+        # -- sign the new reps only ---------------------------------------------
+        signed_new = run(
+            "sign", lambda: _sign(reps_new, cfg, max(1, spark.sparkContext.defaultParallelism * 2))
+        )
+        signed_all = old_sign.withColumn("is_new", F.lit(False)).unionByName(
+            signed_new.withColumn("is_new", F.lit(True))
+        )
+
+        # -- candidates touching the new batch → verify → containment → merge
+        # into the committed assignment (docs for the doc-level verify
+        # channels come from the chain)
+        reps_docs = old_exact.select(
+            F.col("rep_id").alias("conv_id"), "doc"
+        ).unionByName(reps_new)
+        _near_dup_tail(
+            run, cfg, signed_all, reps_docs, edges, "is_new",
+            lambda e: incremental_update(base_clusters, e, conv.select("conv_id")),
+        )
+
+        if gc:
+            # candidates feeds only verify; sign/exact deltas MUST survive for
+            # the next increment in the chain
+            ledger.gc("candidates")
+    return run.out
